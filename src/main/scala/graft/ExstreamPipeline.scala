@@ -18,62 +18,81 @@ import graft.sources.Sources
  * is executor-side and embarrassingly parallel across (window x feature);
  * the only driver-side data are the k x k correlation matrix and the final
  * explanation rows.
+ *
+ * [[explanatoryFeatures]] is the single implementation of the query's
+ * stages; [[constructExplanations]] adds only what is specific to the
+ * batch entry point (trace sources, labelling, the resample explode, the
+ * instability metric and the label join-back) and hands the core all
+ * N+1 resample instances at once through the `rs` instance column.
  */
 object ExstreamPipeline {
 
   /**
-   * The core explanation query (§3.2): given labeled observations, return
-   * per window the ranked-and-filtered explanatory feature list.
+   * The explanation query (§3.2), the one DataFrame implementation of its
+   * three stages: correlation-cluster feature dedup, false-positive
+   * filtering, and entropy reward with the leap cut.
    *
-   * @param obs          long observation table (IntervalLabeler output)
-   * @param featureOrder original feature column order (ranking tie-break)
-   * @return `(window_key, features: array<string>)`
+   * The input may hold several independent instances of the query, told
+   * apart by an optional integer `rs` column (the fused resample path of
+   * [[constructExplanations]]). Every instance runs through the same
+   * shuffles, and its answer is exactly the answer the instance gets on
+   * its own: feature selection is per `rs`, the FP reference series align
+   * on `rs`, and `rs` is folded into the window key for the reward and
+   * leap steps, which key on `window_key` alone. Without an `rs` column
+   * the input is one instance. Any grouping works as a window: re-keying
+   * `window_key` (e.g. to the anomaly type, the notebook's pooled
+   * variant, SURVEY §3.3) is the whole mechanism.
+   *
+   * @param obs          long observation table (IntervalLabeler output),
+   *                     optionally with an integer `rs` instance column
+   * @param featureOrder original feature column order (ranking tie-break);
+   *                     features outside it are not explained
+   * @return `(window_key, features: array<string>)`, plus `rs` when the
+   *         input has it
    */
   def explanatoryFeatures(
       obs: DataFrame,
       featureOrder: Seq[String],
       cfg: ExstreamConfig): DataFrame = {
-    val spark = obs.sparkSession
+    val byRs = obs.columns.contains("rs")
+    val inst =
+      if (byRs) obs.withColumn("window_key", concat_ws("#", col("rs"), col("window_key")))
+      else obs.withColumn("rs", lit(-1))
 
-    // step 1: correlation-cluster feature dedup (global, driver-side graph)
-    val selected: Seq[String] =
-      if (cfg.cluster) {
-        val wide = pivotWide(obs, featureOrder)
-        CorrelationFilter.selectFeatures(wide, featureOrder, cfg.correlationThreshold, cluster = true)
-      } else featureOrder
-    val selectedSet = selected.toSet
-    val obsSel = obs.where(col("feature").isin(selected: _*))
+    // step 1, per rs: correlation-cluster feature dedup — the reference
+    // re-runs get_explanatory_features (clustering included) on each
+    // resample (`script_1.py:213-222`); all moment rows come from ONE
+    // aggregation pass over the wide pivot
+    val keep =
+      if (cfg.cluster && featureOrder.size > 1) {
+        val wide = inst.groupBy("rs", "window_key", "timestamp", "type_data")
+          .pivot("feature", featureOrder).agg(first("value"))
+        CorrelationFilter.selectFeaturesBy(wide, featureOrder, cfg.correlationThreshold, "rs")
+          .map { case (r, sel) => col("rs") === r && col("feature").isin(sel: _*) }
+          .reduceOption(_ || _).getOrElse(lit(false)) // empty input: no instance
+      } else col("feature").isin(featureOrder: _*)
+    val obsSel = inst.where(keep)
 
-    // step 2: false-positive filtering (per window)
+    // step 2, per rs: FP filter; series align on rs so a resampled window
+    // only matches against its own resample's reference series
     val featIdx = featureOrder.zipWithIndex.toMap
     val obsFiltered =
       if (cfg.falsePositiveFiltering) {
         val kept = FalsePositiveFilter.matchCounts(
-          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep, cfg.patternFromRefWindow)
+          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep,
+          cfg.patternFromRefWindow, seriesAlignKeys = Seq("rs"))
         FalsePositiveFilter.filterObservations(obsSel, kept)
       } else obsSel
 
-    // step 3: entropy reward + leap cutoff
+    // step 3: rewards + leap cutoff, all instances through one shuffle
     val rewards = EntropyReward.rewards(obsFiltered, cfg.applyWorstCase)
       .withColumn("feat_idx", EntropyReward.featIdxCol(featIdx, col("feature")))
-    LeapFilter.explanations(rewards)
+    val expl = LeapFilter.explanations(rewards)
+    if (!byRs) expl
+    else expl
+      .withColumn("rs", split(col("window_key"), "#", 2).getItem(0).cast("int"))
+      .withColumn("window_key", split(col("window_key"), "#", 2).getItem(1))
   }
-
-  /**
-   * Group-level variant of the explanation query (SURVEY §3.3): the
-   * notebook computes rewards per ANOMALY TYPE (all windows of a type
-   * pooled) instead of per window (`testing.ipynb` cells 21-26). Any
-   * grouping column works — the reward/leap operators only see
-   * `window_key`, so re-keying the observation table is the whole
-   * mechanism.
-   */
-  def explanatoryFeaturesBy(
-      obs: DataFrame,
-      featureOrder: Seq[String],
-      cfg: ExstreamConfig,
-      groupKeyCol: String): DataFrame =
-    explanatoryFeatures(
-      obs.withColumn("window_key", col(groupKeyCol)), featureOrder, cfg)
 
   /** 16-bit md5-prefix cutoff for a given sample fraction: a 32-hex-char
     * md5 compares lexicographically below the 4-hex-char cutoff iff its
@@ -88,13 +107,6 @@ object ExstreamPipeline {
     val n = math.max(0L, math.min(65536L, math.round(fraction * 65536)))
     if (n >= 65536L) "g" else f"$n%04x"
   }
-
-  /** Pivot the long observation table back to wide (one row per
-    * (window, timestamp, type_data)) — needed only by the correlation step. */
-  def pivotWide(obs: DataFrame, featureOrder: Seq[String]): DataFrame =
-    obs.groupBy("window_key", "timestamp", "type_data")
-      .pivot("feature", featureOrder)
-      .agg(first("value"))
 
   /**
    * End-to-end batch pipeline over a trace folder (§3.1), including
@@ -116,7 +128,7 @@ object ExstreamPipeline {
 
     // instability: the explanation query re-run on N 80% resamples
     // (`script_1.py:227-241`). The resample id `rs` (-1 = full data,
-    // 0..N-1 = samples) is folded into the window key, so ALL N+1 pipeline
+    // 0..N-1 = samples) is the core's instance column, so ALL N+1 pipeline
     // instances ride the SAME shuffles — correlation moments, FP
     // patterns/series, rewards, leap — instead of N+1 serial plan
     // executions (~(N+1)x the shuffled bytes, zero extra stages; q38's
@@ -142,41 +154,8 @@ object ExstreamPipeline {
     val obs = obs0.ckptLazy
       .withColumn("rs", explode(array(rsValues.map(lit(_)): _*)))
       .where(col("rs") === -1 || sampled)
-      .withColumn("window_key", concat_ws("#", col("rs"), col("window_key")))
-
-    // step 1, per rs: correlation-cluster feature dedup — the reference
-    // re-runs get_explanatory_features (clustering included) on each
-    // resample (`script_1.py:213-222`), so feature selection is per-rs;
-    // all N+1 moment rows come from ONE aggregation pass.
-    val obsSel =
-      if (cfg.cluster && featureOrder.size > 1) {
-        val wide = obs.groupBy("rs", "window_key", "timestamp", "type_data")
-          .pivot("feature", featureOrder).agg(first("value"))
-        val selByRs = CorrelationFilter.selectFeaturesBy(
-          wide, featureOrder, cfg.correlationThreshold, "rs")
-        val keep = rsValues.map { r =>
-          col("rs") === r && col("feature").isin(selByRs.getOrElse(r, featureOrder): _*)
-        }.reduce(_ || _)
-        obs.where(keep)
-      } else obs
-
-    // step 2, per rs: FP filter; series align on rs so a resampled window
-    // only matches against its own resample's reference series
+    val expl = explanatoryFeatures(obs, featureOrder, cfg)
     val featIdx = featureOrder.zipWithIndex.toMap
-    val obsFiltered =
-      if (cfg.falsePositiveFiltering) {
-        val kept = FalsePositiveFilter.matchCounts(
-          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep,
-          cfg.patternFromRefWindow, seriesAlignKeys = Seq("rs"))
-        FalsePositiveFilter.filterObservations(obsSel, kept)
-      } else obsSel
-
-    // step 3: rewards + leap cutoff, all instances through one shuffle
-    val rewards = EntropyReward.rewards(obsFiltered, cfg.applyWorstCase)
-      .withColumn("feat_idx", EntropyReward.featIdxCol(featIdx, col("feature")))
-    val expl = LeapFilter.explanations(rewards)
-      .withColumn("rs", split(col("window_key"), "#", 2).getItem(0).cast("int"))
-      .withColumn("window_key", split(col("window_key"), "#", 2).getItem(1))
 
     val main = expl.where(col("rs") === -1).select("window_key", "features")
     val resamples = expl.where(col("rs") >= 0)

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.plans.{FloatVecOps, LongSetOps, MinHashSignature, SegEntropyAgg}
+import org.apache.spark.sql.functions.expr
+import graft.plans.{FloatVecOps, LongSetOps, MinHashSignature, SegEntropyAgg, VecAggs}
 
 /**
  * Library packaging entry point: installs every graft custom Catalyst
@@ -13,27 +14,48 @@ import graft.plans.{FloatVecOps, LongSetOps, MinHashSignature, SegEntropyAgg}
  *
  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`), so
  * a cluster user gets the `graft_*` SQL surface on every session —
- * including pure-SQL clients — without calling the per-object
- * `register(spark)` helpers the engine's own operators use. Both paths
- * share the same [[graft.plans]] builders, so an expression fix lands in
- * both automatically.
+ * including pure-SQL clients. The engine's own Column APIs go through
+ * [[GraftExtensions.call]], which installs from the same table, so the
+ * two paths cannot drift apart.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    (LongSetOps.FunctionName,
-      "_FUNC_(a, b) - intersection size of two sorted bigint arrays", LongSetOps.builder),
-    (FloatVecOps.FunctionName,
-      "_FUNC_(a, b) - dot product of two float arrays", FloatVecOps.builder),
-    (MinHashSignature.FunctionName,
-      "_FUNC_(hashes, k) - k-permutation MinHash signature", MinHashSignature.builder),
-    (SegEntropyAgg.FunctionName,
-      "_FUNC_(value, class, worstCase) - segmentation entropy aggregate", SegEntropyAgg.builder))
-
   override def apply(ext: SparkSessionExtensions): Unit =
-    functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-        builder))
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+
+  private def fn(name: String, usage: String, builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+      builder)
+
+  /** Every `graft_*` function, once: (identifier, usage info, builder). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn(LongSetOps.FunctionName,
+      "_FUNC_(a, b) - intersection size of two sorted bigint arrays", LongSetOps.builder),
+    fn(FloatVecOps.FunctionName,
+      "_FUNC_(a, b) - dot product of two float arrays", FloatVecOps.builder),
+    fn(MinHashSignature.FunctionName,
+      "_FUNC_(hashes, k) - k-permutation MinHash signature", MinHashSignature.builder),
+    fn(SegEntropyAgg.FunctionName,
+      "_FUNC_(value, class, worstCase) - segmentation entropy aggregate", SegEntropyAgg.builder),
+    fn(VecAggs.OuterProductFunctionName,
+      "_FUNC_(vec) - flattened sum of vec * vec^T over bigint arrays", VecAggs.builder),
+    fn(VecAggs.BucketSumsFunctionName,
+      "_FUNC_(vec, flag) - elementwise bigint array sums over all rows, then over flagged rows",
+      VecAggs.bucketSumsBuilder))
+
+  /** Column API: `name(args)` with SQL-text arguments resolved in the
+    * calling plan. The function is installed into the session from
+    * [[functions]] only when it is missing (an extension-built session
+    * already has it) — Column construction from a catalyst Expression is
+    * session-internal in Spark 4, so the registry is the public bridge. */
+  def call(spark: SparkSession, name: String, args: String*): Column = {
+    val registry = spark.sessionState.functionRegistry
+    functions.find(_._1.funcName == name).foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
+    expr(s"$name(${args.mkString(", ")})")
+  }
 }

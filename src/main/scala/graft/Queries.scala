@@ -7875,7 +7875,7 @@ object Queries {
     // ---- the pooled (type-level) grouping variant (SURVEY §3.3): the
     // notebook computes one explanation per anomaly TYPE, all windows of
     // the type pooled. Re-keying the observation table IS the mechanism
-    // (explanatoryFeaturesBy) — here pooled into 8 user cohorts ----
+    // — here pooled into 8 user cohorts ----
     "q41_exstream_by_group" -> ((s, d) => exstreamExplainByGroup(s, d)),
 
     // ---- worst-case shuffle (T2): quantized values force cross-class
@@ -7965,18 +7965,8 @@ object Queries {
       .withColumn("feat_idx", EntropyReward.featIdxCol(eventFeatIdx, col("feature")))
   }
 
-  def exstreamExplain(s: SparkSession, d: String): DataFrame = {
-    val obs = eventsObs(s, d).select(
-      col("user_id").cast("string").as("window_key"),
-      col("feature"), col("value"), col("type_data"))
-    LeapFilter.explanations(eventRewards(obs))
-      .select(col("window_key").cast("long").as("user_id"),
-        // scalar (not array<string>) so downstream harnesses can sort/hash
-        // the column; ranking order is preserved inside the joined string
-        array_join(col("features"), " ").as("features"),
-        size(col("features")).as("n_features"))
-      .orderBy("user_id")
-  }
+  def exstreamExplain(s: SparkSession, d: String): DataFrame =
+    eventExplanations(s, d, col("user_id"), "user_id")
 
   /**
    * The pooled grouping variant (SURVEY §3.3, `testing.ipynb` cells
@@ -7986,15 +7976,24 @@ object Queries {
    * mechanism — here user cohorts (user_id % 8) stand in for anomaly
    * types over the generic events table.
    */
-  def exstreamExplainByGroup(s: SparkSession, d: String): DataFrame = {
+  def exstreamExplainByGroup(s: SparkSession, d: String): DataFrame =
+    eventExplanations(s, d, col("user_id") % 8, "group_id")
+
+  /** One explanation per `key` value over the events table. The rewards
+    * are the oracle-rounded [[eventRewards]], so this is the reward/leap
+    * back end alone, not [[ExstreamPipeline.explanatoryFeatures]]. */
+  private def eventExplanations(
+      s: SparkSession, d: String, key: Column, keyName: String): DataFrame = {
     val obs = eventsObs(s, d).select(
-      (col("user_id") % 8).cast("string").as("window_key"),
+      key.cast("string").as("window_key"),
       col("feature"), col("value"), col("type_data"))
     LeapFilter.explanations(eventRewards(obs))
-      .select(col("window_key").cast("long").as("group_id"),
+      .select(col("window_key").cast("long").as(keyName),
+        // scalar (not array<string>) so downstream harnesses can sort/hash
+        // the column; ranking order is preserved inside the joined string
         array_join(col("features"), " ").as("features"),
         size(col("features")).as("n_features"))
-      .orderBy("group_id")
+      .orderBy(keyName)
   }
 
   /**

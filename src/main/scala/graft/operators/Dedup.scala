@@ -299,7 +299,8 @@ object Dedup {
   val MaxDriverEdges: Long = 4194304L
 
   /**
-   * Size-gated connected components: distinct forward edges are counted
+   * Size-gated connected components: edges with a null endpoint are
+   * dropped, then the distinct forward edges are counted
    * once (the count doubles as the lazy checkpoint's materialization —
    * the r13 one-scan rule); at or under `maxDriverEdges` the component
    * minimum is computed by a driver union-find over the collected edge
@@ -309,17 +310,21 @@ object Dedup {
    * anywhere); above the gate, or for non-LONG keys, the distributed
    * min-label/pointer-jump loop runs verbatim on the already-distinct
    * edges. DedupSizedSpec proves driver == distributed on path / star /
-   * multi-component fixtures and exercises the fallback.
+   * multi-component / null-endpoint fixtures and exercises the fallback.
    */
   def dupClustersSized(
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
     val spark = pairs.sparkSession
+    // an edge with a null endpoint links nothing: dropped up front, so
+    // every branch sees the same edges (the driver union-find cannot
+    // index a null id, while the distributed loop would carry it through)
     val fwd = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
     val longKeys = fwd.schema.fields
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
     if (!longKeys || maxDriverEdges <= 0L)
-      return dupClustersWithRounds(pairs, aCol, bCol)._1
+      return dupClustersWithRounds(fwd, "a", "b")._1
     val uniq = fwd.distinct()
       .ckptLazy // consumers: gate count + (driver collect | distributed rounds)
     val m = uniq.count() // materializes the checkpoint

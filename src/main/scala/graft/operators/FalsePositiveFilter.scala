@@ -127,16 +127,7 @@ object FalsePositiveFilter {
               $"timestamp", $"value".cast("double").as("value")))),
             x => x.getField("value")
           ).as("series"))
-    } else obs
-      .where($"type_data" === 0)
-      .groupBy("feature", seriesAlignKeys :+ "trace_id": _*)
-      .agg(
-        transform(
-          array_sort(collect_list(struct(
-            $"window_key", $"timestamp", $"value".cast("double").as("value")))),
-          x => x.getField("value")
-        ).as("series"))
-      .drop("trace_id")
+    } else refSeries(obs, "feature" +: seriesAlignKeys :+ "trace_id").drop("trace_id")
 
     // pattern = this window's ref rows (script-faithful) or ano rows
     val patternClass = if (patternFromRefWindow) 0 else 1
@@ -173,6 +164,21 @@ object FalsePositiveFilter {
       .withColumn("kept", col("passes") || (!col("any_pass") && col("min_rank") === 1))
       .select("window_key", "feature", "n_matches", "kept")
   }
+
+  /** The per-trace reference series: one `series` array per `keys`
+    * group, holding the group's reference-class (`type_data` 0) values in
+    * the canonical (window_key, timestamp, value) order. The batch filter
+    * groups per (feature, [align keys], trace); the streaming registry
+    * groups per feature. */
+  private[graft] def refSeries(obs: DataFrame, keys: Seq[String]): DataFrame =
+    obs.where(col("type_data") === 0)
+      .groupBy(keys.map(col): _*)
+      .agg(
+        transform(
+          array_sort(collect_list(struct(
+            col("window_key"), col("timestamp"), col("value").cast("double").as("value")))),
+          x => x.getField("value")
+        ).as("series"))
 
   /** Restrict an observation table to the features kept per window. */
   def filterObservations(obs: DataFrame, kept: DataFrame): DataFrame =

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /**
@@ -42,20 +41,13 @@ object FloatVecOps {
 
   val FunctionName = "graft_float_dot"
 
-  /** Expression builder shared by session-local registration and
-    * [[graft.GraftExtensions]]. */
+  /** Expression builder, installed through [[graft.GraftExtensions]]. */
   def builder(exprs: Seq[Expression]): Expression =
     FloatArrayDot(exprs.head, exprs(1))
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
-
   /** Column API: dot product of two array<float> columns (by name). */
-  def floatDot(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"$FunctionName($a, $b)")
-  }
+  def floatDot(spark: SparkSession, a: String, b: String): Column =
+    graft.GraftExtensions.call(spark, FunctionName, a, b)
 }
 
 case class FloatArrayDot(left: Expression, right: Expression)

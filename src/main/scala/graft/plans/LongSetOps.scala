@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /**
@@ -82,24 +81,14 @@ object LongSetOps {
 
   val FunctionName = "graft_long_intersect_size"
 
-  /** Register the expression in the session's function registry
-    * (idempotent) — Column construction from a catalyst Expression is
-    * session-internal in Spark 4, so the registry is the public bridge. */
-  /** Expression builder shared by session-local registration and
-    * [[graft.GraftExtensions]]. */
+  /** Expression builder, installed through [[graft.GraftExtensions]]. */
   def builder(exprs: Seq[Expression]): Expression =
     LongArrayIntersectSize(exprs.head, exprs(1))
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
-
   /** Column API: intersection size of two array<bigint> columns. The
     * columns must resolve by name in the calling plan. */
-  def longIntersectSize(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"$FunctionName($a, $b)")
-  }
+  def longIntersectSize(spark: SparkSession, a: String, b: String): Column =
+    graft.GraftExtensions.call(spark, FunctionName, a, b)
 }
 
 case class LongArrayIntersectSize(left: Expression, right: Expression)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /**
@@ -81,10 +80,10 @@ object MinHashSignature {
 
   val FunctionName = "graft_minhash_signature"
 
-  /** Expression builder shared by session-local registration and
-    * [[graft.GraftExtensions]]. The k argument is folded at plan time, so
-    * a pure-SQL caller passing a non-constant gets a clear analysis-time
-    * error instead of an opaque eval-time NPE. */
+  /** Expression builder, installed through [[graft.GraftExtensions]].
+    * The k argument is folded at plan time, so a pure-SQL caller passing
+    * a non-constant gets a clear analysis-time error instead of an opaque
+    * eval-time NPE. */
   def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, s"$FunctionName expects (hashes, k), got ${exprs.length} args")
     if (!exprs(1).foldable)
@@ -94,15 +93,9 @@ object MinHashSignature {
       exprs(1).eval().asInstanceOf[Number].intValue())
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
-
   /** Column API; `hashesCol` must resolve by name in the calling plan. */
-  def minhashSignature(spark: SparkSession, hashesCol: String, k: Int): Column = {
-    register(spark)
-    expr(s"$FunctionName($hashesCol, $k)")
-  }
+  def minhashSignature(spark: SparkSession, hashesCol: String, k: Int): Column =
+    graft.GraftExtensions.call(spark, FunctionName, hashesCol, k.toString)
 }
 
 case class MinHashSignatureExpr(child: Expression, k: Int)

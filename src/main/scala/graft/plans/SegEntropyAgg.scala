@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 import graft.functions.EntropyCore
@@ -61,10 +60,10 @@ object SegEntropyAgg {
 
   val FunctionName = "graft_seg_entropy"
 
-  /** Expression builder shared by session-local registration and
-    * [[graft.GraftExtensions]]. The worst-case flag is folded at plan
-    * time, so a pure-SQL caller passing a non-constant gets a clear
-    * analysis-time error instead of an opaque eval-time exception. */
+  /** Expression builder, installed through [[graft.GraftExtensions]].
+    * The worst-case flag is folded at plan time, so a pure-SQL caller
+    * passing a non-constant gets a clear analysis-time error instead of
+    * an opaque eval-time exception. */
   def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"$FunctionName expects (value, class, worst_case), got ${exprs.length} args")
@@ -75,16 +74,11 @@ object SegEntropyAgg {
       exprs(2).eval().asInstanceOf[Boolean])
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
-
   /** Column API: aggregate over (valueCol, classCol) resolved by name. */
   def segEntropy(spark: SparkSession, valueCol: String, classCol: String,
-                 applyWorstCase: Boolean): Column = {
-    register(spark)
-    expr(s"$FunctionName(CAST($valueCol AS DOUBLE), CAST($classCol AS INT), $applyWorstCase)")
-  }
+                 applyWorstCase: Boolean): Column =
+    graft.GraftExtensions.call(spark, FunctionName,
+      s"CAST($valueCol AS DOUBLE)", s"CAST($classCol AS INT)", applyWorstCase.toString)
 }
 
 case class SegEntropyAggExpr(

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /**
@@ -45,16 +44,10 @@ object VecAggs {
     OuterProductSumAggExpr(exprs.head)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      OuterProductFunctionName, builder, "scala_udf")
-
   /** Column API: Σ vec·vecᵀ (flattened row-major) for `array<bigint>`
     * column `vecCol`, resolved by name. */
-  def outerProductSum(spark: SparkSession, vecCol: String): Column = {
-    register(spark)
-    expr(s"$OuterProductFunctionName($vecCol)")
-  }
+  def outerProductSum(spark: SparkSession, vecCol: String): Column =
+    graft.GraftExtensions.call(spark, OuterProductFunctionName, vecCol)
 
   val BucketSumsFunctionName = "graft_bucket_sums"
 
@@ -64,19 +57,13 @@ object VecAggs {
     BucketSumsAggExpr(exprs.head, exprs(1))
   }
 
-  def registerBucketSums(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BucketSumsFunctionName, bucketSumsBuilder, "scala_udf")
-
   /** Column API: elementwise Σ of `array<bigint>` column `vecCol` over
     * ALL rows concatenated with the Σ over rows where boolean `flagCol`
     * holds — one 2·D array [cc_0..cc_{D-1}, ct_0..ct_{D-1}], exactly the
     * per-bucket (total, flagged) count pair the DSIR ratio pass reads
     * (one fused pass instead of an explode + two conditional sums). */
-  def bucketSums(spark: SparkSession, vecCol: String, flagCol: String): Column = {
-    registerBucketSums(spark)
-    expr(s"$BucketSumsFunctionName($vecCol, $flagCol)")
-  }
+  def bucketSums(spark: SparkSession, vecCol: String, flagCol: String): Column =
+    graft.GraftExtensions.call(spark, BucketSumsFunctionName, vecCol, flagCol)
 }
 
 case class OuterProductSumAggExpr(

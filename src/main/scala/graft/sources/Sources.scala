@@ -68,22 +68,6 @@ object Sources {
       .sorted // reference uses os.listdir order (nondeterministic); we canonicalize
   }
 
-  /**
-   * S3+S4: read ONE trace CSV (first unnamed column = integer timestamp,
-   * `get_data.py:77-79`) and melt it to long format
-   * `(trace_id, timestamp, feature, value)`. Metric columns are whatever
-   * the header declares — discovered at read time.
-   */
-  def readTraceLong(spark: SparkSession, dataFolder: String, traceId: String): DataFrame = {
-    val wide = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(s"$dataFolder/$traceId.csv")
-    val tsCol = wide.columns.head // unnamed index column, pandas' index_col=0
-    val metricCols = wide.columns.tail
-    meltTrace(wide, tsCol, metricCols.toIndexedSeq).withColumn("trace_id", lit(traceId))
-  }
-
   /** Melt a wide trace frame using one `stack` generator (single projection,
     * no shuffle; stays inside whole-stage codegen). */
   def meltTrace(wide: DataFrame, tsCol: String, metricCols: Seq[String]): DataFrame = {
@@ -95,19 +79,27 @@ object Sources {
       s"stack(${metricCols.size}, $stackArgs) as (feature, value)")
   }
 
-  /** All traces of a folder, melted and unioned, with the filename-derived
-    * anomaly type (`get_data.py:71`). Also returns the per-trace metric
-    * column order (feature insertion order drives reward tie-breaking). */
+  /** S3+S4: all traces of a folder, each read once (first unnamed column
+    * = integer timestamp, `get_data.py:77-79`; metric columns are whatever
+    * the header declares), melted to long format `(timestamp, feature,
+    * value, trace_id)` and unioned. Also returns the feature order: the
+    * header order of the first trace (reference: columns of the concat'd
+    * frame, i.e. first file read), taken from that trace's own read —
+    * it drives reward tie-breaking. */
   def readAllTraces(spark: SparkSession, dataFolder: String, labelFilename: String)
       : (DataFrame, Seq[String]) = {
     val ids = listTraceIds(spark, dataFolder, labelFilename)
     require(ids.nonEmpty, s"no trace CSVs under $dataFolder")
-    // feature order: header order of the first trace (reference: columns of
-    // the concat'd frame, i.e. first file read)
-    val head = spark.read.option("header", "true").csv(s"$dataFolder/${ids.head}.csv")
-    val featureOrder = head.columns.tail.toIndexedSeq
-    val union = ids.map(readTraceLong(spark, dataFolder, _)).reduce(_ unionByName _)
-    (union, featureOrder)
+    val wides = ids.map(id => id -> spark.read
+      .option("header", "true")
+      .option("inferSchema", "true")
+      .csv(s"$dataFolder/$id.csv"))
+    val union = wides.map { case (id, wide) =>
+      // wide.columns.head: the unnamed index column, pandas' index_col=0
+      meltTrace(wide, wide.columns.head, wide.columns.tail.toIndexedSeq)
+        .withColumn("trace_id", lit(id))
+    }.reduce(_ unionByName _)
+    (union, wides.head._2.columns.tail.toIndexedSeq)
   }
 
   /** Driver testdata parquet (TESTDATA.md). */

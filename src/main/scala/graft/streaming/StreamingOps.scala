@@ -715,7 +715,7 @@ object StreamingOps {
    * trace)), while an online operator only holds the closing window's
    * buffer. Building the series ONCE from recorded history (the static
    * side, exactly like the banded corpus registry) and handing the map
-   * to [[explainOnCloseCfg]] narrows that gap: a closing window then
+   * to [[explainOnClose]] narrows that gap: a closing window then
    * matches against the series batch would use, not just its own rows.
    *
    * Ordering is the batch canonicalization — (window_key, timestamp,
@@ -727,13 +727,7 @@ object StreamingOps {
    * traces keep the window-local default (empty registry).
    */
   def refSeriesRegistry(obs: DataFrame): Map[String, Array[Double]] =
-    obs.where(col("type_data") === 0)
-      .groupBy("feature")
-      .agg(transform(
-        array_sort(collect_list(struct(
-          col("window_key"), col("timestamp"),
-          col("value").cast("double").as("value")))),
-        x => x.getField("value")).as("series"))
+    graft.operators.FalsePositiveFilter.refSeries(obs, Seq("feature"))
       .collect()
       .map(r => r.getString(0) -> r.getSeq[Double](1).toArray)
       .toMap
@@ -752,20 +746,6 @@ object StreamingOps {
   case class StreamExplanation(window_key: String, n_obs: Int,
                                explanation: Seq[String])
 
-  /**
-   * The paper's ONLINE behavior (`exstream.pdf` §1: explanations
-   * triggered as annotated anomaly windows close): buffer observations
-   * per window, and the moment the close marker arrives, emit the full
-   * EXstream explanation — class entropy / segmentation reward per
-   * feature, ranking, leap cutoff — computed by the same pure kernels
-   * the batch plan uses ([[graft.functions.EntropyCore]]), so streaming
-   * and batch answers are bit-identical on identical windows.
-   *
-   * Scale shape: state and the at-close computation are bounded by one
-   * window's span (label spans are 1-2k ticks in the reference data, and
-   * `maxBuffered` caps adversarial input), and windows are independent
-   * groups — state shards across executors like any keyed stream.
-   */
   /** Per-window buffer with an O(1) size counter (List.size is O(n) —
     * counting per arriving row would be quadratic in window length) and
     * the max event time seen, which drives the event-time timeout. */
@@ -802,27 +782,31 @@ object StreamingOps {
       math.max(buf.maxTsMs + timeoutSpanMs, state.getCurrentWatermarkMs() + 1))
   }
 
+  /**
+   * The paper's ONLINE behavior (`exstream.pdf` §1: explanations
+   * triggered as annotated anomaly windows close): buffer observations
+   * per window, and the moment the close marker arrives, emit the full
+   * EXstream explanation — class entropy / segmentation reward per
+   * feature, ranking, leap cutoff — computed by the same pure kernels
+   * the batch plan uses ([[graft.functions.EntropyCore]]), so streaming
+   * and batch answers are bit-identical on identical windows.
+   *
+   * Scale shape: state and the at-close computation are bounded by one
+   * window's span (label spans are 1-2k ticks in the reference data, and
+   * `maxBuffered` caps adversarial input), and windows are independent
+   * groups — state shards across executors like any keyed stream.
+   *
+   * `cfg` carries the full batch configuration surface: all four
+   * (cluster, falsePositiveFiltering) configs of the reference's loop run
+   * online, so a streaming deployment answers exactly what the batch
+   * pipeline answers (StreamingSpec pins the parity per config). A
+   * non-empty `refSeries` ([[refSeriesRegistry]]) matches closing windows
+   * against the recorded trace-wide FP series (see [[explainBuffered]]).
+   */
   def explainOnClose(
       obs: Dataset[StreamObs],
       featureOrder: Seq[String],
-      applyWorstCase: Boolean = true,
-      maxBuffered: Int = 100000,
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout(),
-      timeoutDuration: String = "1 hour",
-      timeoutSpanMs: Long = 3600000L,
-      watermarkDelay: String = "10 seconds"): Dataset[StreamExplanation] =
-    explainOnCloseCfg(obs, featureOrder,
-      graft.ExstreamConfig(applyWorstCase = applyWorstCase),
-      maxBuffered, timeout, timeoutDuration, timeoutSpanMs, watermarkDelay)
-
-  /** [[explainOnClose]] with the FULL batch configuration surface: all
-    * four (cluster, falsePositiveFiltering) configs of the reference's
-    * loop run online, so a streaming deployment answers exactly what the
-    * batch pipeline answers (StreamingSpec pins the parity per config). */
-  def explainOnCloseCfg(
-      obs: Dataset[StreamObs],
-      featureOrder: Seq[String],
-      cfg: graft.ExstreamConfig,
+      cfg: graft.ExstreamConfig = graft.ExstreamConfig(),
       maxBuffered: Int = 100000,
       timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout(),
       timeoutDuration: String = "1 hour",
@@ -855,14 +839,6 @@ object StreamingOps {
           }
       }
   }
-
-  /** Rewards + leap filter only — the original cluster=F fp=F close path. */
-  def explainBuffered(
-      buf: Seq[StreamObs],
-      featureOrder: Seq[String],
-      applyWorstCase: Boolean): Seq[String] =
-    explainBuffered(buf, featureOrder,
-      graft.ExstreamConfig(applyWorstCase = applyWorstCase))
 
   /**
    * Pure per-window explanation over a closed buffer — ALL FOUR batch

@@ -11,7 +11,7 @@ import graft.operators.Dedup
  * spec proves it bit-identical to the distributed min-label /
  * pointer-jump fixpoint on the component shapes that exercise every
  * union order (path, star, clique, multi-component, self-loop,
- * duplicate/reversed edges), and exercises the above-gate fallback and
+ * duplicate/reversed edges) and on null endpoints, and exercises the above-gate fallback and
  * the gate-disabled dispatch.
  */
 class DedupSizedSpec extends AnyFunSuite {
@@ -62,6 +62,19 @@ class DedupSizedSpec extends AnyFunSuite {
     assert(labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L)) == reference)
     // maxDriverEdges <= 0 skips the gate count entirely
     assert(labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 0L)) == reference)
+  }
+
+  test("null endpoints are dropped before the gate: driver == distributed") {
+    import spark.implicits._
+    val df = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)), (None, None),
+      (Some(3L), Some(4L))).toDF("doc_a", "doc_b")
+    val driver = labelsOf(Dedup.dupClustersSized(df))
+    assert(driver == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L), s"driver $driver")
+    // above the gate, and with the gate disabled, the distributed loop
+    // sees the same null-free edges
+    assert(labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L)) == driver)
+    assert(labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 0L)) == driver)
   }
 
   test("non-long keys dispatch to the distributed loop") {

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * The library-packaging contract: a session constructed with
- * `spark.sql.extensions=graft.GraftExtensions` has every `graft_*`
- * function available to pure SQL with NO imperative register call.
+ * `spark.sql.extensions=graft.GraftExtensions` has all six `graft_*`
+ * functions available to pure SQL with NO imperative register call.
  * (Suites run sequentially in one forked JVM, so stopping the shared
  * session here is safe — the next suite's getOrCreate builds a fresh
  * one.)
@@ -36,7 +36,21 @@ class ExtensionsSpec extends AnyFunSuite {
         .head().getInt(0)
       assert(inter == 2)
 
-      // the aggregate expression resolves and runs through SQL too
+      val sig = spark.sql(
+        "SELECT graft_minhash_signature(array(1L, 2L, 3L), 4) AS s").head().getSeq[Long](0)
+      assert(sig.length == 4)
+
+      // the aggregate expressions resolve and run through SQL too
+      val outer = spark.sql(
+        """SELECT graft_outer_product_sum(v) AS m
+           FROM VALUES (array(1L, 2L)), (array(3L, 4L)) AS t(v)""").head().getSeq[Long](0)
+      assert(outer == Seq(10L, 14L, 14L, 20L))
+      val buckets = spark.sql(
+        """SELECT graft_bucket_sums(v, f) AS b
+           FROM VALUES (array(1L, 2L), true), (array(3L, 4L), false) AS t(v, f)""")
+        .head().getSeq[Long](0)
+      assert(buckets == Seq(4L, 6L, 1L, 2L))
+
       val ent = spark.sql(
         """SELECT graft_seg_entropy(CAST(v AS DOUBLE), CAST(c AS INT), false) AS e
            FROM VALUES (1.0, 0), (2.0, 1) AS t(v, c)""").head().getDouble(0)
@@ -71,13 +85,10 @@ class ExtensionsSpec extends AnyFunSuite {
         assert(out == Set(7, Int.MaxValue), s"got $out")
       } finally spark.conf.set("spark.sql.ansi.enabled", saved)
 
-      import org.apache.spark.sql.catalyst.FunctionIdentifier
-      Seq(graft.plans.LongSetOps.FunctionName, graft.plans.FloatVecOps.FunctionName,
-        graft.plans.MinHashSignature.FunctionName, graft.plans.SegEntropyAgg.FunctionName)
-        .foreach { name =>
-          assert(spark.sessionState.functionRegistry
-            .functionExists(FunctionIdentifier(name)), s"$name not installed")
-        }
+      assert(GraftExtensions.functions.size == 6)
+      GraftExtensions.functions.foreach { case (id, _, _) =>
+        assert(spark.sessionState.functionRegistry.functionExists(id), s"$id not installed")
+      }
     } finally {
       spark.stop()
       SparkSession.clearActiveSession()

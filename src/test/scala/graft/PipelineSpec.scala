@@ -121,8 +121,9 @@ class PipelineSpec extends AnyFunSuite {
   test("type-level grouping variant pools windows per anomaly type (SURVEY §3.3)") {
     val (obs, featureOrder, _) = loaded
     import spark.implicits._
-    val byType = ExstreamPipeline.explanatoryFeaturesBy(
-      obs, featureOrder, ExstreamConfig(applyWorstCase = true), groupKeyCol = "ano_type")
+    // re-keying the windows to the anomaly type is the whole mechanism
+    val byType = ExstreamPipeline.explanatoryFeatures(
+      obs.withColumn("window_key", $"ano_type"), featureOrder, ExstreamConfig(applyWorstCase = true))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     assert(byType.keySet == Set("bursty input", "stalled input"))
     byType.values.foreach(f => assert(f.contains("f_sep")))
@@ -130,7 +131,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("RandomForest importance baseline ranks the separating feature first (M5)") {
     val (obs, featureOrder, _) = loaded
-    val wide = ExstreamPipeline.pivotWide(obs, featureOrder)
+    val wide = obs.groupBy("window_key", "timestamp", "type_data")
+      .pivot("feature", featureOrder).agg(org.apache.spark.sql.functions.first("value"))
     val imps = FeatureImportance.randomForestImportances(wide, featureOrder)
       .collect().map(r => r.getString(0) -> r.getDouble(1))
     assert(imps.map(_._1).take(2).toSet.intersect(Set("f_sep", "f_corr")).nonEmpty)
@@ -180,6 +182,64 @@ class PipelineSpec extends AnyFunSuite {
         s"$wk instability: ${row.getDouble(4)} vs $wantInst")
     }
     assert(fused.length == 4)
+  }
+
+  test("multi-instance core: two rs instances equal each instance run alone " +
+      "(clustering + FP filtering)") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    // Two windows of one trace (after StreamingSpec's registry fixture).
+    // Instance -1 holds both windows, instance 0 holds w2 alone, and they
+    // disagree on w2 through both filters: w2's fb pattern matches w1's
+    // sawtooth reference twice, so the FP filter keeps fb only when w1 is
+    // absent; fe clones fa in w2 only, so clustering drops fe only when w1
+    // is absent. FP series or a feature selection leaking across
+    // instances makes the fused answer differ from the instance alone.
+    def obsW(w: String, f: String, refTs: Seq[Long], refVals: Seq[Double],
+             anoTs: Seq[Long], anoVals: Seq[Double]): Seq[(String, String, Long, Int, String, Double)] =
+      refTs.zip(refVals).map { case (t, v) => (w, "trace1", t, 0, f, v) } ++
+        anoTs.zip(anoVals).map { case (t, v) => (w, "trace1", t, 1, f, v) }
+    val faR = Seq(5.0, 1.0, 5.0, 1.0, 5.0, 1.0, 5.0, 1.0)
+    val faA = Seq(9.0, 9.5, 10.0, 9.7)
+    val saw = Seq(1.0, 2.0, 3.0, 1.0, 2.0, 3.0, 1.0, 2.0)
+    // in phase opposite to fa's reference, so |corr(fa, fb)| stays under
+    // the clustering threshold and fb reaches the FP step
+    val osc = Seq(-40.1, -30.0, -40.3, -30.2, -40.5, -30.4, -40.7, -30.6)
+    val fdR = Seq(1.0, 9.3, 2.2, 8.1, 1.4, 9.9, 2.8, 8.6)
+    val fdA = Seq(2.0, 4.5, 7.0, 8.8)
+    val fbA = Seq(5.0, 10.0, 15.0, 5.1)
+    val w1 = obsW("w1", "fa", 1L to 8L, faR, 21L to 24L, faA) ++
+      obsW("w1", "fb", 1L to 8L, saw, 21L to 24L, fbA) ++
+      obsW("w1", "fd", 1L to 8L, fdR, 21L to 24L, fdA) ++
+      obsW("w1", "fe", 1L to 8L, Seq(3.0, 7.1, 2.4, 9.0, 1.1, 8.2, 4.4, 6.6),
+        21L to 24L, Seq(2.5, 8.0, 3.1, 7.7))
+    val w2 = obsW("w2", "fa", 31L to 38L, faR, 41L to 44L, faA) ++
+      obsW("w2", "fb", 31L to 38L, osc, 41L to 44L, fbA) ++
+      obsW("w2", "fd", 31L to 38L, fdR, 41L to 44L, fdA) ++
+      obsW("w2", "fe", 31L to 38L, faR.map(2 * _ + 1), 41L to 44L, faA.map(2 * _ + 1))
+    def toObs(rows: Seq[(String, String, Long, Int, String, Double)]): DataFrame =
+      rows.toDF("window_key", "trace_id", "timestamp", "type_data", "feature", "value")
+    def rowsOf(df: DataFrame): Map[String, Seq[String]] =
+      df.collect().map(r =>
+        r.getAs[String]("window_key") -> r.getSeq[String](r.fieldIndex("features"))).toMap
+    val order = Seq("fa", "fb", "fd", "fe")
+    val cfg = ExstreamConfig(cluster = true, correlationThreshold = 0.95,
+      falsePositiveFiltering = true, maxDistance = 1.0, matchCountKeep = 1,
+      patternFromRefWindow = false, applyWorstCase = true)
+
+    val alone = Map(
+      -1 -> rowsOf(ExstreamPipeline.explanatoryFeatures(toObs(w1 ++ w2), order, cfg)),
+      0 -> rowsOf(ExstreamPipeline.explanatoryFeatures(toObs(w2), order, cfg)))
+    assert(alone(-1)("w2") == Seq("fa", "fe") && alone(0)("w2") == Seq("fa", "fb"),
+      s"instances must disagree on w2 through both filters: $alone")
+    val both = toObs(w1 ++ w2).withColumn("rs", lit(-1))
+      .unionByName(toObs(w2).withColumn("rs", lit(0)))
+    val fused = ExstreamPipeline.explanatoryFeatures(both, order, cfg)
+    assert(fused.columns.toSet == Set("rs", "window_key", "features"))
+    alone.foreach { case (rs, want) =>
+      assert(rowsOf(fused.where(col("rs") === rs)) == want, s"instance $rs")
+    }
   }
 
   test("sampleFraction is honored by the fused resampler (16-bit md5 cutoff)") {

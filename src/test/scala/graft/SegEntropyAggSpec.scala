@@ -66,11 +66,11 @@ class SegEntropyAggSpec extends AnyFunSuite {
   }
 
   test("registry misuse fails analysis with a clear type message") {
-    SegEntropyAgg.register(spark)
     import spark.implicits._
     val df = Seq(("a", 1)).toDF("s", "i")
     val e = intercept[Exception] {
-      df.groupBy("s").agg(expr(s"${SegEntropyAgg.FunctionName}(s, i, true)")).collect()
+      df.groupBy("s").agg(
+        GraftExtensions.call(spark, SegEntropyAgg.FunctionName, "s", "i", "true")).collect()
     }
     assert(e.getMessage.contains("requires (double, int)"))
   }

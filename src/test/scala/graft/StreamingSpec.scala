@@ -92,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.head.getAs[Int]("n_obs") == 10)
     assert(out.head.getSeq[String](2) == Seq("f1"))
     // and the streaming answer is exactly the pure-kernel (= batch) answer
-    assert(StreamingOps.explainBuffered(w1, Seq("f1", "f2", "f3"), applyWorstCase = true) == Seq("f1"))
+    assert(StreamingOps.explainBuffered(w1, Seq("f1", "f2", "f3"), ExstreamConfig()) == Seq("f1"))
   }
 
   test("streaming explanation matches batch on ALL FOUR configs (cluster x fp)") {
@@ -156,7 +156,7 @@ class StreamingSpec extends AnyFunSuite {
       falsePositiveFiltering = true, maxDistance = 1.0, matchCountKeep = 1,
       patternFromRefWindow = false, applyWorstCase = true)
     val input = MemoryStream[StreamObs]
-    val exps = StreamingOps.explainOnCloseCfg(input.toDS(), order, cfgTT)
+    val exps = StreamingOps.explainOnClose(input.toDS(), order, cfgTT)
     val q = exps.writeStream.outputMode("append")
       .format("memory").queryName("exps_cfg").start()
     input.addData(w1: _*)
