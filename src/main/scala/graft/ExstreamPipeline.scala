@@ -12,12 +12,16 @@ import graft.sources.Sources
  * (`/root/reference/script_1.py:34-95,118-184`) re-expressed as lazy Spark
  * plans over the long observation table.
  *
- * Stage shape (§3.4): scan -> broadcast interval join (no shuffle) ->
- * groupBy(window, feature) shuffle for match counts + rewards ->
- * window-function leap cutoff -> collect_list per window. All heavy work
- * is executor-side and embarrassingly parallel across (window x feature);
- * the only driver-side data are the k x k correlation matrix and the final
- * explanation rows.
+ * Stage shape (§3.4): one CSV scan per distinct trace header (the
+ * headers are read on the driver, no job) -> broadcast interval join (no
+ * shuffle) -> wide pivot + one `graft_pair_moments` aggregate for the
+ * correlation dedup of every instance -> groupBy(window, feature)
+ * shuffles for the FP patterns, reference series and match counts ->
+ * groupBy(window, feature) for the rewards -> window-function leap cutoff
+ * -> collect_list per window. All heavy work is executor-side and
+ * embarrassingly parallel across (window x feature); the only
+ * driver-side data are one k(k-1)/2-pair moment array per instance and
+ * the final explanation rows.
  *
  * [[explanatoryFeatures]] is the single implementation of the query's
  * stages; [[constructExplanations]] adds only what is specific to the
@@ -61,8 +65,8 @@ object ExstreamPipeline {
 
     // step 1, per rs: correlation-cluster feature dedup — the reference
     // re-runs get_explanatory_features (clustering included) on each
-    // resample (`script_1.py:213-222`); all moment rows come from ONE
-    // aggregation pass over the wide pivot
+    // resample (`script_1.py:213-222`); every instance's pair moments
+    // come from ONE aggregation pass over the wide pivot
     val keep =
       if (cfg.cluster && featureOrder.size > 1) {
         val wide = inst.groupBy("rs", "window_key", "timestamp", "type_data")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.expr
-import graft.plans.{FloatVecOps, LongSetOps, MinHashSignature, SegEntropyAgg, VecAggs}
+import graft.plans.{FloatVecOps, LongSetOps, MinHashSignature, PairMoments, SegEntropyAgg, VecAggs}
 
 /**
  * Library packaging entry point: installs every graft custom Catalyst
@@ -44,7 +44,11 @@ object GraftExtensions {
       "_FUNC_(vec) - flattened sum of vec * vec^T over bigint arrays", VecAggs.builder),
     fn(VecAggs.BucketSumsFunctionName,
       "_FUNC_(vec, flag) - elementwise bigint array sums over all rows, then over flagged rows",
-      VecAggs.bucketSumsBuilder))
+      VecAggs.bucketSumsBuilder),
+    fn(PairMoments.FunctionName,
+      "_FUNC_(vec) - per pair (i, j < i) of a double array: (n, sum x_i, sum x_j, " +
+        "sum x_i^2, sum x_j^2, sum x_i*x_j) over rows where both cells are non-null",
+      PairMoments.builder))
 
   /** Column API: `name(args)` with SQL-text arguments resolved in the
     * calling plan. The function is installed into the session from

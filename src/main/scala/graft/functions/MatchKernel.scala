@@ -97,7 +97,13 @@ object MatchKernel {
     if (d.isEmpty) return Seq.empty
     val m = q.length
     val excl = math.ceil(m / 4.0).toInt
-    val order = Array.range(0, d.length).sortBy(i => (d(i), i))
+    // only candidates are sorted: the greedy pass stops at the first
+    // distance above the threshold, so every offset it could accept has
+    // d <= maxDistance — or is NaN (sorted last) when no distance exceeds
+    // the threshold at all, in which case every offset is a candidate
+    val all = Array.range(0, d.length)
+    val candidates = if (d.exists(_ > maxDistance)) all.filter(d(_) <= maxDistance) else all
+    val order = candidates.sortBy(i => (d(i), i))
     val suppressed = new Array[Boolean](d.length)
     val acc = Seq.newBuilder[(Double, Int)]
     var oi = 0

@@ -1,18 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.plans.PairMoments
 
 /**
  * A1/M2/M3/M4 (SURVEY.md §2.5, §2.8): correlation-clustering feature dedup
  * — `correlated_features_filter`
  * (`/root/reference/exstream/correlation_filtering.py:7-67`).
  *
- * All pairwise Pearson correlations are computed in ONE distributed
- * aggregation pass (k(k-1)/2 `corr` aggregates — k is the feature count,
- * dozens at most, so the aggregate row is tiny); graph building and
- * connected components run driver-side on the k x k result, which is the
- * right placement: the data-sized work is the scan, the graph is O(k²).
+ * All pairwise Pearson correlations come from ONE distributed aggregation
+ * pass: the [[graft.plans.PairMoments]] aggregate sums the six moments of
+ * every feature pair per group, so the collected row is 6·k(k−1)/2
+ * doubles (k is the feature count, dozens at most). The division,
+ * graph building and connected components run driver-side on that
+ * k x k result, which is the right placement: the data-sized work is the
+ * scan, the graph is O(k²).
  *
  * Deliberate divergences (SURVEY §4a quirks 4/5/7):
  *  - correlations are computed over feature columns only (the reference
@@ -25,33 +27,10 @@ import org.apache.spark.sql.functions._
  */
 object CorrelationFilter {
 
-  // every pairwise correlation from moment sums in ONE aggregation pass
-  // — the built-in `corr` needed a separate zero-variance prescan (its
-  // internal division throws under ANSI on constant columns), which
-  // meant two actions and two executions of the upstream pivot shuffle
-  // per call (and the pipeline calls this once per instability
-  // resample). Conditional sums keep pandas' pairwise null deletion;
-  // the division happens driver-side in plain Scala, where a zero
-  // denominator is just "no edge" (pandas' NaN semantics). Moment-form
-  // cancellation costs a couple of the 16 digits — irrelevant for an
-  // |corr| > threshold decision.
-  private def momentAggs(featureOrder: Seq[String]) = {
-    val pairs = for { i <- featureOrder.indices; j <- 0 until i } yield (i, j)
-    val aggs = pairs.flatMap { case (i, j) =>
-      val (x, y) = (col(featureOrder(i)), col(featureOrder(j)))
-      val both = x.isNotNull && y.isNotNull
-      def s(e: org.apache.spark.sql.Column, tag: String) =
-        sum(when(both, e)).as(s"${tag}_${i}_$j")
-      Seq(count(when(both, 1)).as(s"n_${i}_$j"),
-        s(x, "sx"), s(y, "sy"), s(x * x, "sxx"), s(y * y, "syy"), s(x * y, "sxy"))
-    }
-    (pairs, aggs)
-  }
-
   /** The pure graph core: union-find clustering with an edge iff
     * |corr(i,j)| > threshold (NaN = undefined = no edge); each cluster's
     * representative is its smallest original column index. Shared by the
-    * distributed moment-row path and the streaming window-local path. */
+    * distributed moment path and the streaming window-local path. */
   private[graft] def selectByCorr(
       featureOrder: Seq[String],
       correlationThreshold: Double,
@@ -75,28 +54,34 @@ object CorrelationFilter {
     if (den > 0.0) (n * sxy - sx * sy) / math.sqrt(den) else Double.NaN
   }
 
-  /** Union-find over one moment row; `offset` = leading non-moment columns. */
-  private def selectFromMomentRow(
-      row: org.apache.spark.sql.Row,
-      offset: Int,
-      pairs: IndexedSeq[(Int, Int)],
+  /** Union-find over one [[graft.plans.PairMoments]] array: pair k's
+    * moments are `m(6k) .. m(6k + 5)`. Moments rather than the built-in
+    * `corr`: its in-aggregate division throws under ANSI on constant
+    * columns, while here the division happens driver-side, where a zero
+    * denominator is just "no edge" (pandas' NaN semantics). Moment-form
+    * cancellation costs a couple of the 16 digits — irrelevant for an
+    * |corr| > threshold decision. */
+  private def selectFromMoments(
       featureOrder: Seq[String],
-      correlationThreshold: Double): Seq[String] =
+      correlationThreshold: Double,
+      m: Array[Double]): Seq[String] = {
+    val pairs = for { i <- featureOrder.indices; j <- 0 until i } yield (i, j)
     selectByCorr(featureOrder, correlationThreshold, pairs, { k =>
-      val base = offset + k * 6
-      if (row.isNullAt(base + 1)) Double.NaN // null sums = no overlapping rows
-      else corrFromMoments(row.getLong(base).toDouble,
-        row.getDouble(base + 1), row.getDouble(base + 2),
-        row.getDouble(base + 3), row.getDouble(base + 4), row.getDouble(base + 5))
+      val b = 6 * k
+      corrFromMoments(m(b), m(b + 1), m(b + 2), m(b + 3), m(b + 4), m(b + 5))
     })
+  }
 
   /**
    * Window-local pure variant for the streaming at-close path: the same
-   * moment math and union-find over ONE closed window's buffered
-   * observations (the only data an online operator has at close). Batch
-   * computes the moments over every window in one distributed pass; on a
-   * single-window input the two are identical, which is what the
-   * streaming/batch parity test pins.
+   * moment update ([[graft.plans.PairMoments.update]]) and union-find
+   * over ONE closed window's buffered observations (the only data an
+   * online operator has at close). A feature absent from a (timestamp,
+   * class) row drops that row from its pairs; a NaN value is summed,
+   * exactly as in the batch aggregate. Batch computes the moments over
+   * every window in one distributed pass; on a single-window input the
+   * two are identical, which is what the streaming/batch parity test
+   * pins.
    *
    * @param rows (timestamp, type_data, feature, value) — one value per
    *             (timestamp, type_data, feature), the wide-pivot contract
@@ -105,35 +90,24 @@ object CorrelationFilter {
       rows: Iterable[(Long, Int, String, Double)],
       featureOrder: Seq[String],
       correlationThreshold: Double): Seq[String] = {
-    if (featureOrder.size <= 1) return featureOrder
     val idx = featureOrder.zipWithIndex.toMap
-    // wide pivot: (ts, class) -> dense feature-value row (NaN = absent)
-    val wide = rows.groupBy(r => (r._1, r._2)).map { case (_, g) =>
-      val arr = Array.fill(featureOrder.size)(Double.NaN)
-      g.foreach(r => idx.get(r._3).foreach(i => arr(i) = r._4))
-      arr
+    val m = new Array[Double](PairMoments.cells(featureOrder.size))
+    // wide pivot: one (ts, class) row at a time into the shared moment update
+    rows.groupBy(r => (r._1, r._2)).foreach { case (_, g) =>
+      val x = new Array[Double](featureOrder.size)
+      val present = new Array[Boolean](featureOrder.size)
+      g.foreach(r => idx.get(r._3).foreach { i => x(i) = r._4; present(i) = true })
+      PairMoments.update(m, x, present)
     }
-    val pairs = for { i <- featureOrder.indices; j <- 0 until i } yield (i, j)
-    selectByCorr(featureOrder, correlationThreshold, pairs.toIndexedSeq, { k =>
-      val (i, j) = pairs(k)
-      var n = 0L; var sx = 0.0; var sy = 0.0; var sxx = 0.0; var syy = 0.0; var sxy = 0.0
-      wide.foreach { arr =>
-        val x = arr(i); val y = arr(j)
-        if (!x.isNaN && !y.isNaN) { // pairwise null deletion
-          n += 1; sx += x; sy += y; sxx += x * x; syy += y * y; sxy += x * y
-        }
-      }
-      if (n == 0) Double.NaN
-      else corrFromMoments(n.toDouble, sx, sy, sxx, syy, sxy)
-    })
+    selectFromMoments(featureOrder, correlationThreshold, m)
   }
 
   /**
-   * One moment row PER group value (e.g. one per instability resample),
-   * all from a single aggregation pass — no per-group re-execution of the
-   * upstream pivot shuffle. The group count is tiny (1 + resample
-   * rounds), so the collected result is a handful of rows regardless of
-   * data volume.
+   * One moment array PER group value (e.g. one per instability
+   * resample), all from a single aggregation pass — no per-group
+   * re-execution of the upstream pivot shuffle. The group count is tiny
+   * (1 + resample rounds), so the collected result is a handful of rows
+   * regardless of data volume.
    *
    * @param wide      one row per observation, feature columns present
    * @param featureOrder feature columns in original (insertion) order
@@ -145,14 +119,11 @@ object CorrelationFilter {
       featureOrder: Seq[String],
       correlationThreshold: Double,
       groupCol: String): Map[Int, Seq[String]] = {
-    if (featureOrder.size <= 1) {
-      return wide.select(groupCol).distinct().collect()
-        .map(r => r.getInt(0) -> featureOrder).toMap
-    }
-    val (pairs, aggs) = momentAggs(featureOrder)
-    wide.groupBy(groupCol).agg(aggs.head, aggs.tail: _*).collect()
+    val vec = featureOrder.map(f => s"`${f.replace("`", "``")}`").mkString("array(", ", ", ")")
+    wide.groupBy(groupCol).agg(PairMoments.pairMoments(wide.sparkSession, vec)).collect()
       .map { row =>
-        row.getInt(0) -> selectFromMomentRow(row, 1, pairs, featureOrder, correlationThreshold)
+        row.getInt(0) -> selectFromMoments(featureOrder, correlationThreshold,
+          row.getSeq[Double](1).toArray)
       }.toMap
   }
 }

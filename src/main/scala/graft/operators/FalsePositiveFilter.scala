@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.MatchKernel
@@ -39,20 +39,11 @@ import graft.functions.MatchKernel
  */
 object FalsePositiveFilter {
 
+  // pattern and series as Array[Double] (r14: the Seq signature boxes
+  // every element read; the Array signature is one primitive bulk copy)
   private val matchCountUdf = udf {
-    // series as Array[Double] (r14: the Seq signature boxes every
-    // element read; the Array signature is one primitive bulk copy)
-    (pattern: Seq[Row], series: Array[Double], maxDistance: Double) =>
-      // value is the FINAL tie-break (ADVICE r4): without it, rows sharing
-      // (trace, ts, class) would sort by collect_list arrival order —
-      // nondeterministic across runs and silently divergent from
-      // streaming, which sorts its window buffer by (timestamp, value).
-      // Within one window's pattern trace and class are constant, so the
-      // effective order IS streaming's (ts, value).
-      val q = pattern.sortBy(r =>
-          (r.getString(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-        .map(_.getDouble(3)).toArray
-      MatchKernel.matchCount(q, series, maxDistance)
+    (pattern: Array[Double], series: Array[Double], maxDistance: Double) =>
+      MatchKernel.matchCount(pattern, series, maxDistance)
   }
 
   /**
@@ -134,10 +125,14 @@ object FalsePositiveFilter {
     val patterns = obs
       .where($"type_data" === patternClass)
       .groupBy("window_key", "feature" +: seriesAlignKeys: _*)
-      .agg(collect_list(struct(
-        $"trace_id".as("t"), $"timestamp".cast("long").as("ts"),
-        $"type_data".cast("int").as("c"),
-        $"value".cast("double").as("v"))).as("pattern"))
+      // sorted by (timestamp, value): value is the final tie-break, so
+      // rows sharing a timestamp cannot order by collect_list arrival
+      // (nondeterministic across runs); trace and class are constant
+      // within a window's pattern, so this is streaming's order too
+      .agg(transform(
+        array_sort(collect_list(struct(
+          $"timestamp".cast("long").as("ts"), $"value".cast("double").as("v")))),
+        x => x.getField("v")).as("pattern"))
 
     val counted = patterns
       .join(series, "feature" +: seriesAlignKeys) // AQE: broadcast while small, SMJ at scale

@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,12 +15,13 @@ import org.apache.spark.sql.types._
  * The reference reads one CSV per trace with pandas and discovers metric
  * columns from the header (`/root/reference/utils/get_data.py:19-20,77`).
  * Trace schemas are dynamic (8- vs 12-column variants,
- * `explore_data.ipynb` cells 2/9), so traces are read per-file and
- * normalized to LONG format before the union — schema drift between traces
- * then cannot break the plan, and every downstream operator works on the
- * same narrow shape. Each per-file read is still a distributed scan; with
- * thousands of trace files one would instead group files by schema
- * fingerprint and batch the reads, which keeps driver-side work O(#schemas).
+ * `explore_data.ipynb` cells 2/9), so every trace is normalized to LONG
+ * format before the union — schema drift between traces then cannot
+ * break the plan, and every downstream operator works on the same narrow
+ * shape. [[readAllTraces]] reads each trace's header line on the driver
+ * (Spark's own CSV header rules, no Spark job), groups the traces by
+ * header and reads each group in ONE CSV scan with an explicit all-string
+ * schema: driver-side work and plan size are O(#schemas), not O(#files).
  */
 object Sources {
 
@@ -58,7 +63,7 @@ object Sources {
 
   /** Trace files in a folder, excluding the label file (`get_data.py:8-23`). */
   def listTraceIds(spark: SparkSession, dataFolder: String, labelFilename: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(dataFolder)
+    val path = new Path(dataFolder)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(path).toSeq
       .map(_.getPath.getName)
@@ -69,37 +74,63 @@ object Sources {
   }
 
   /** Melt a wide trace frame using one `stack` generator (single projection,
-    * no shuffle; stays inside whole-stage codegen). */
-  def meltTrace(wide: DataFrame, tsCol: String, metricCols: Seq[String]): DataFrame = {
+    * no shuffle; stays inside whole-stage codegen). `carry` columns are
+    * appended to every melted row. */
+  def meltTrace(wide: DataFrame, tsCol: String, metricCols: Seq[String],
+                carry: Column*): DataFrame = {
     val stackArgs = metricCols
       .map(c => s"'$c', cast(`$c` as double)")
       .mkString(", ")
-    wide.selectExpr(
-      s"cast(`$tsCol` as long) as timestamp",
-      s"stack(${metricCols.size}, $stackArgs) as (feature, value)")
+    wide.select(Seq(
+      expr(s"cast(`$tsCol` as long)").as("timestamp"),
+      expr(s"stack(${metricCols.size}, $stackArgs)").as(Seq("feature", "value"))) ++ carry: _*)
   }
 
-  /** S3+S4: all traces of a folder, each read once (first unnamed column
-    * = integer timestamp, `get_data.py:77-79`; metric columns are whatever
-    * the header declares), melted to long format `(timestamp, feature,
-    * value, trace_id)` and unioned. Also returns the feature order: the
-    * header order of the first trace (reference: columns of the concat'd
-    * frame, i.e. first file read), taken from that trace's own read —
-    * it drives reward tie-breaking. */
+  /** A CSV file's column names as Spark's CSV reader derives them with
+    * `header = true`: the first non-empty, non-comment line, tokenized by
+    * the CSV parser, made safe (an empty name at index i becomes `_c<i>`,
+    * duplicates get their index as suffix). Read on the driver through the
+    * Hadoop `FileSystem` — no Spark job. */
+  private def headerColumns(spark: SparkSession, file: String): Seq[String] = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"), false, conf.sessionLocalTimeZone)
+    val line = CSVUtils.readHeaderLine(new Path(file), options,
+      spark.sessionState.newHadoopConf())
+      .getOrElse(throw new IllegalArgumentException(s"no header line in $file"))
+    val tokens = new CsvParser(options.asParserSettings).parseLine(line)
+    CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, options).toIndexedSeq
+  }
+
+  /** S3+S4: all traces of a folder (first unnamed column = integer
+    * timestamp, `get_data.py:77-79`; metric columns are whatever the
+    * header declares), melted to long format `(timestamp, feature, value,
+    * trace_id)` and unioned. Traces sharing a header are read in one CSV
+    * scan with an all-string schema; `meltTrace`'s casts then give the
+    * values schema inference would have given its numeric types, and
+    * `trace_id` is the file name without `.csv`. Also returns the feature
+    * order: the header order of the first trace (reference: columns of
+    * the concat'd frame, i.e. first file read) — it drives reward
+    * tie-breaking. Plan construction starts no Spark job unless a header
+    * group holds more files than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`, which Spark
+    * lists in one distributed job. */
   def readAllTraces(spark: SparkSession, dataFolder: String, labelFilename: String)
       : (DataFrame, Seq[String]) = {
     val ids = listTraceIds(spark, dataFolder, labelFilename)
     require(ids.nonEmpty, s"no trace CSVs under $dataFolder")
-    val wides = ids.map(id => id -> spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(s"$dataFolder/$id.csv"))
-    val union = wides.map { case (id, wide) =>
-      // wide.columns.head: the unnamed index column, pandas' index_col=0
-      meltTrace(wide, wide.columns.head, wide.columns.tail.toIndexedSeq)
-        .withColumn("trace_id", lit(id))
+    val files = ids.map(id => s"$dataFolder/$id.csv")
+    val headers = files.map(headerColumns(spark, _))
+    val union = headers.distinct.map { header =>
+      val group = files.zip(headers).collect { case (f, h) if h == header => f }
+      val wide = spark.read
+        .option("header", "true")
+        .schema(StructType(header.map(StructField(_, StringType))))
+        .csv(group: _*)
+      // header.head: the unnamed index column, pandas' index_col=0
+      meltTrace(wide, header.head, header.tail,
+        regexp_replace(col("_metadata.file_name"), "\\.csv$", "").as("trace_id"))
     }.reduce(_ unionByName _)
-    (union, wides.head._2.columns.tail.toIndexedSeq)
+    (union, headers.head.tail)
   }
 
   /** Driver testdata parquet (TESTDATA.md). */

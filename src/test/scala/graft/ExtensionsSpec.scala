@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * The library-packaging contract: a session constructed with
- * `spark.sql.extensions=graft.GraftExtensions` has all six `graft_*`
+ * `spark.sql.extensions=graft.GraftExtensions` has all seven `graft_*`
  * functions available to pure SQL with NO imperative register call.
  * (Suites run sequentially in one forked JVM, so stopping the shared
  * session here is safe — the next suite's getOrCreate builds a fresh
@@ -50,6 +50,11 @@ class ExtensionsSpec extends AnyFunSuite {
            FROM VALUES (array(1L, 2L), true), (array(3L, 4L), false) AS t(v, f)""")
         .head().getSeq[Long](0)
       assert(buckets == Seq(4L, 6L, 1L, 2L))
+      // int arrays are cast to array<double>; the null cell drops its row
+      val moments = spark.sql(
+        """SELECT graft_pair_moments(v) AS m
+           FROM VALUES (array(1, 2)), (array(3, NULL)) AS t(v)""").head().getSeq[Double](0)
+      assert(moments == Seq(1.0, 2.0, 1.0, 4.0, 1.0, 2.0))
 
       val ent = spark.sql(
         """SELECT graft_seg_entropy(CAST(v AS DOUBLE), CAST(c AS INT), false) AS e
@@ -85,7 +90,7 @@ class ExtensionsSpec extends AnyFunSuite {
         assert(out == Set(7, Int.MaxValue), s"got $out")
       } finally spark.conf.set("spark.sql.ansi.enabled", saved)
 
-      assert(GraftExtensions.functions.size == 6)
+      assert(GraftExtensions.functions.size == 7)
       GraftExtensions.functions.foreach { case (id, _, _) =>
         assert(spark.sessionState.functionRegistry.functionExists(id), s"$id not installed")
       }

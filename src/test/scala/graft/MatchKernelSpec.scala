@@ -26,6 +26,66 @@ class MatchKernelSpec extends AnyFunSuite {
     }.toArray
   }
 
+  /** The greedy selection as first written: sort EVERY offset by
+    * (distance, offset), accept until the first distance above the
+    * threshold. `MatchKernel.matches` sorts only the candidates and must
+    * accept exactly the same list. */
+  private def fullSortMatches(q: Array[Double], t: Array[Double],
+                              maxDistance: Double): Seq[(Double, Int)] = {
+    val d = MatchKernel.distanceProfile(q, t)
+    val excl = math.ceil(q.length / 4.0).toInt
+    val suppressed = new Array[Boolean](d.length)
+    val acc = Seq.newBuilder[(Double, Int)]
+    val it = Array.range(0, d.length).sortBy(i => (d(i), i)).iterator
+    var done = false
+    while (it.hasNext && !done) {
+      val idx = it.next()
+      if (d(idx) > maxDistance) done = true
+      else if (!suppressed(idx)) {
+        acc += ((d(idx), idx))
+        (math.max(0, idx - excl) to math.min(d.length - 1, idx + excl))
+          .foreach(suppressed(_) = true)
+      }
+    }
+    acc.result()
+  }
+
+  test("matches sorts only candidates: same accepted list as the full-sort greedy " +
+      "(random series, tied distances, thresholds above and below every distance)") {
+    val rnd = new scala.util.Random(23)
+    def same(q: Array[Double], t: Array[Double], maxD: Double): Unit = {
+      val got = MatchKernel.matches(q, t, maxD)
+      val want = fullSortMatches(q, t, maxD)
+      // compare distance bits too: NaN == NaN, -0.0 != 0.0
+      assert(got.map { case (d, i) => (java.lang.Double.doubleToLongBits(d), i) } ==
+        want.map { case (d, i) => (java.lang.Double.doubleToLongBits(d), i) },
+        s"maxDistance=$maxD: got $got, want $want")
+    }
+    var tiedTrials = 0
+    (0 until 300).foreach { trial =>
+      val m = 2 + rnd.nextInt(12)
+      val n = m + rnd.nextInt(120)
+      // few distinct levels or a repeating period: many exactly tied distances
+      val t = trial % 3 match {
+        case 0 => Array.fill(n)(rnd.nextDouble() * 10)
+        case 1 => Array.fill(n)(rnd.nextInt(3).toDouble)
+        case _ =>
+          val period = Array.fill(1 + rnd.nextInt(8))(rnd.nextInt(4).toDouble)
+          Array.tabulate(n)(i => period(i % period.length))
+      }
+      if (trial % 25 == 0) t(rnd.nextInt(n)) = Double.NaN // NaN distances
+      val q = if (rnd.nextBoolean()) t.slice(0, m) else Array.fill(m)(rnd.nextInt(3).toDouble)
+      val d = MatchKernel.distanceProfile(q, t).filterNot(_.isNaN)
+      if (d.distinct.length < d.length) tiedTrials += 1
+      val thresholds =
+        if (d.isEmpty) Seq(0.0, 1.0)
+        else Seq(d.max + 1.0, d.min - 1.0, d(rnd.nextInt(d.length)),
+          d.min + rnd.nextDouble() * (d.max - d.min))
+      thresholds.foreach(same(q, t, _))
+    }
+    assert(tiedTrials > 100, s"only $tiedTrials trials had tied distances")
+  }
+
   test("distanceProfile agrees with definition-level z-norm Euclidean") {
     val rnd = new scala.util.Random(7)
     val t = Array.fill(200)(rnd.nextDouble() * 100 - 50)
