@@ -3,12 +3,13 @@
     python3 scripts/exbench_ab.py PARENT_DIR CHANGE_DIR --workload explain --seeds 1-6
 
 Runs `exbench/run.py` of each checkout (in its own directory, so each
-builds and runs its own sources) once per seed, alternating which side
-goes first from seed to seed so that drift of a shared host hits both
-sides alike. Prints every run's metrics, then per end-to-end metric the
-median of each side, the change/parent ratio of the medians, the parent's
-quartile distance (Q3 - Q1) and on how many seed pairs the change was
-lower. Exits 1 when any run failed its output check.
+builds and runs its own sources at its own default run length) once per
+seed, alternating which side goes first from seed to seed so that drift
+of a shared host hits both sides alike. Prints every run's metrics,
+then per end-to-end metric the median of each side, the change/parent
+ratio of the medians, the parent's quartile distance (Q3 - Q1) and on
+how many seed pairs the change was lower. Exits 1 when any run failed
+its output check.
 """
 import argparse
 import json
@@ -23,9 +24,9 @@ def seeds(spec):
     return range(int(lo), int(hi or lo) + 1)
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed):
     r = subprocess.run([sys.executable, "exbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", seconds, "--trace", "0"],
+                        "--seed", str(seed), "--trace", "0"],
                        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = r.stdout.strip().splitlines()
     if not lines:
@@ -39,7 +40,6 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-6")
-    ap.add_argument("--seconds", default="12")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     values = {"parent": {}, "change": {}}
@@ -47,7 +47,7 @@ def main():
     for i, s in enumerate(seeds(a.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            res = run(sides[side], a.workload, s, a.seconds)
+            res = run(sides[side], a.workload, s)
             all_correct &= bool(res["correct"])
             print(f"seed {s} {side}: correct={res['correct']} failed={res['failed']} " +
                   " ".join(f"{k}={v['value']:.3f}" for k, v in res["metrics"].items()), flush=True)

@@ -97,21 +97,20 @@ object MatchKernel {
     if (d.isEmpty) return Seq.empty
     val m = q.length
     val excl = math.ceil(m / 4.0).toInt
-    // only candidates are sorted: the greedy pass stops at the first
-    // distance above the threshold, so every offset it could accept has
-    // d <= maxDistance — or is NaN (sorted last) when no distance exceeds
-    // the threshold at all, in which case every offset is a candidate
+    // the candidate filter enforces the threshold, so only candidates are
+    // sorted and every one of them is accepted unless suppressed. A full
+    // ascending greedy pass would stop at the first distance above the
+    // threshold; NaN distances sort last, so it reaches them only when no
+    // distance exceeds the threshold — then every offset is a candidate
     val all = Array.range(0, d.length)
     val candidates = if (d.exists(_ > maxDistance)) all.filter(d(_) <= maxDistance) else all
     val order = candidates.sortBy(i => (d(i), i))
     val suppressed = new Array[Boolean](d.length)
     val acc = Seq.newBuilder[(Double, Int)]
     var oi = 0
-    var done = false
-    while (oi < order.length && !done) {
+    while (oi < order.length) {
       val idx = order(oi)
-      if (d(idx) > maxDistance) done = true
-      else if (!suppressed(idx)) {
+      if (!suppressed(idx)) {
         acc += ((d(idx), idx))
         var k = math.max(0, idx - excl)
         val hi = math.min(d.length - 1, idx + excl)

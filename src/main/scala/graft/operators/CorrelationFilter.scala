@@ -23,7 +23,11 @@ import graft.plans.PairMoments
  *    column index — the reference uses `set.pop()`, which is
  *    nondeterministic across processes;
  *  - the returned list is feature names only (the reference appends a
- *    nested `["type_data"]` that would crash downstream pandas).
+ *    nested `["type_data"]` that would crash downstream pandas);
+ *  - a NaN value is summed, not dropped pair by pair as pandas'
+ *    `df.corr()` drops it (batch and streaming alike): the pair's
+ *    correlation is NaN, so the pair gets no edge. Only null (absent)
+ *    cells are pairwise-deleted.
  */
 object CorrelationFilter {
 

@@ -86,19 +86,23 @@ object Sources {
       expr(s"stack(${metricCols.size}, $stackArgs)").as(Seq("feature", "value"))) ++ carry: _*)
   }
 
-  /** A CSV file's column names as Spark's CSV reader derives them with
-    * `header = true`: the first non-empty, non-comment line, tokenized by
-    * the CSV parser, made safe (an empty name at index i becomes `_c<i>`,
-    * duplicates get their index as suffix). Read on the driver through the
-    * Hadoop `FileSystem` — no Spark job. */
-  private def headerColumns(spark: SparkSession, file: String): Seq[String] = {
+  /** Each CSV file's column names as Spark's CSV reader derives them
+    * with `header = true`: the first non-empty, non-comment line,
+    * tokenized by the CSV parser, made safe (an empty name at index i
+    * becomes `_c<i>`, duplicates get their index as suffix). Read on the
+    * driver through the Hadoop `FileSystem` — no Spark job. The options,
+    * Hadoop conf and parser are built once for all files. */
+  private def headerColumns(spark: SparkSession, files: Seq[String]): Seq[Seq[String]] = {
     val conf = spark.sessionState.conf
     val options = new CSVOptions(Map("header" -> "true"), false, conf.sessionLocalTimeZone)
-    val line = CSVUtils.readHeaderLine(new Path(file), options,
-      spark.sessionState.newHadoopConf())
-      .getOrElse(throw new IllegalArgumentException(s"no header line in $file"))
-    val tokens = new CsvParser(options.asParserSettings).parseLine(line)
-    CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, options).toIndexedSeq
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val parser = new CsvParser(options.asParserSettings)
+    files.map { file =>
+      val line = CSVUtils.readHeaderLine(new Path(file), options, hadoopConf)
+        .getOrElse(throw new IllegalArgumentException(s"no header line in $file"))
+      CSVUtils.makeSafeHeader(parser.parseLine(line), conf.caseSensitiveAnalysis, options)
+        .toIndexedSeq
+    }
   }
 
   /** S3+S4: all traces of a folder (first unnamed column = integer
@@ -119,7 +123,7 @@ object Sources {
     val ids = listTraceIds(spark, dataFolder, labelFilename)
     require(ids.nonEmpty, s"no trace CSVs under $dataFolder")
     val files = ids.map(id => s"$dataFolder/$id.csv")
-    val headers = files.map(headerColumns(spark, _))
+    val headers = headerColumns(spark, files)
     val union = headers.distinct.map { header =>
       val group = files.zip(headers).collect { case (f, h) if h == header => f }
       val wide = spark.read
